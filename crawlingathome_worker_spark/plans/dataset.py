@@ -11,8 +11,10 @@ reference workflow lives in one repo:
   → caption near-dup collapse (MinHash-LSH, greedy keep-lowest)
   → CLIP-proxy score gate → final snapshot + stats row.
 
-Every stage is the scale shape used elsewhere: window dedup and banded
-equi-join candidates only — no all-pairs stage anywhere.
+Every stage is the scale shape used elsewhere: window dedup, bucket-local
+banded-hamming pairs and a MinHash band equi-join — no all-pairs stage
+anywhere. Pair ids keep id_col's native type, so every keep-lowest rule
+compares in its native order.
 """
 
 from __future__ import annotations
@@ -52,39 +54,23 @@ def finalize_pairs(
                     materialized — no all-pairs stage."""
     if dedup_strategy not in ("greedy", "component"):
         raise ValueError(f"unknown dedup_strategy: {dedup_strategy!r}")
-    id_type = dict(raw.dtypes)[id_col]
 
-    def _drop_set(pairs: DataFrame, a: str, b: str, out_type: str) -> DataFrame:
+    def _drop_set(pairs: DataFrame, a: str, b: str) -> DataFrame:
         """Pair graph → the ids to drop, one column named id_col."""
         if dedup_strategy == "component":
             from ..operators.components import component_members
 
-            # cast BACK to the id's native type BEFORE ranking (ADVICE r5):
-            # the pHash stage feeds string-cast ids, and component_members
-            # picks the kept representative by min in the node column's sort
-            # order — string order would keep "10" over "2" for numeric ids,
-            # violating the documented keep-min-native-id / greedy-parity
-            # contract. Casting first makes min-rank ≡ greedy's least().
-            typed = pairs.select(
-                F.col(a).cast(out_type).alias(a), F.col(b).cast(out_type).alias(b)
-            )
-            return component_members(typed, src=a, dst=b).select(
-                F.col(a).alias(id_col)
-            )
-        return pairs.select(
-            F.greatest(F.col(a).cast(out_type), F.col(b).cast(out_type)).alias(id_col)
-        ).distinct()
+            return component_members(pairs, src=a, dst=b).select(F.col(a).alias(id_col))
+        return pairs.select(F.greatest(a, b).alias(id_col)).distinct()
 
     # 1. exact pHash dedup — identical/re-encoded images collapse (first-wins)
     exact = phash_dedup(raw, order_col=id_col)
 
     # 2. near-dup images: banded hamming pairs → drop per strategy
     near = phash_near_pairs(
-        exact.select(F.col(id_col).cast("string").alias("image_key"), "phash"),
-        id_col="image_key",
-        max_hamming=phash_max_hamming,
+        exact.select(id_col, "phash"), id_col=id_col, max_hamming=phash_max_hamming
     )
-    img_clean = exact.join(_drop_set(near, "id_a", "id_b", id_type), id_col, "left_anti")
+    img_clean = exact.join(_drop_set(near, "id_a", "id_b"), id_col, "left_anti")
 
     # 3. caption near-dups: MinHash-LSH over captions, drop per strategy
     sigs = minhash_signatures(
@@ -92,9 +78,7 @@ def finalize_pairs(
         num_perm=num_perm,
     )
     cap_pairs = minhash_lsh_pairs(sigs, threshold=caption_jaccard, num_perm=num_perm)
-    deduped = img_clean.join(
-        _drop_set(cap_pairs, "doc_a", "doc_b", id_type), id_col, "left_anti"
-    )
+    deduped = img_clean.join(_drop_set(cap_pairs, "doc_a", "doc_b"), id_col, "left_anti")
 
     # 4. CLIP-proxy gate (the reference project's whole purpose, README.md:8)
     final = deduped.filter(F.col("score") >= score_threshold)

@@ -22,3 +22,14 @@ def spark():
     s = get_spark(app_name="cah-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Arrow batches of 7 rows (a small prime) for one test, so Python stages
+    see many batch boundaries; the session's setting is restored after."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield 7
+    spark.conf.set(key, prev)

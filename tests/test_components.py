@@ -141,10 +141,10 @@ def test_max_iter_exhaustion_raises(spark):
 
 
 def test_finalize_component_keeps_numeric_min_across_string_cast(spark):
-    """The pHash stage casts ids to STRING for the banded pair join; the
-    component drop-set must still pick representatives in the id's NATIVE
-    order (ADVICE r5): cluster {2, 10} keeps 2 (numeric min) even though
-    string order would keep "10"."""
+    """The component drop-set must pick representatives in the id's NATIVE
+    order: cluster {2, 10} keeps 2 (numeric min), where string order would
+    keep "10". The pHash pair finder keeps ids in their native type, so no
+    string cast can reorder them."""
     from crawlingathome_worker_spark.plans.dataset import finalize_pairs
 
     rows = [

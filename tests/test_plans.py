@@ -196,6 +196,16 @@ def test_knn_self_join_bucket_fanout_bounded(spark):
     assert "Exchange hashpartitioning(band" in plan or "Exchange hashpartitioning(sig" in plan
 
 
+def test_q26_signature_udf_evaluated_once(spark):
+    """q26 runs the banded-signature UDF in ONE ArrowEvalPython. A plain
+    posexplode of the signature column makes Catalyst infer a size(sigs) > 0
+    filter and push a second copy of the UDF below the scan repartition."""
+    import __spark_entry__ as em
+
+    plan = _plan(em.queries()["q26_embedding_neardup"](spark, SF))
+    assert plan.split("== Initial Plan ==")[0].count("ArrowEvalPython") == 1, plan
+
+
 def test_minhash_lsh_join_is_bucket_keyed(spark):
     """q20's pair join must shuffle on the (band, bucket) LSH key — never a
     cartesian/broadcast-nested-loop over documents, and no probe job thanks to

@@ -55,13 +55,41 @@ def test_lsh_signature_collision_for_identical(spark):
     assert sigs[0] == sigs[2]  # identical vectors, identical signature
 
 
-def test_knn_self_join_finds_neardups(spark):
-    df, _ = _embeddings(spark)
+def test_knn_self_join_finds_neardups(spark, small_arrow_batches):
+    """Planted near-dups are found; and with coarse 3-bit tables (~37 rows per
+    bucket, so buckets span many 7-row Arrow batches) the bucket-local
+    executor returns exactly the numpy brute-force set: every pair that
+    shares a (table, signature) bucket and has cosine ≥ threshold."""
+    from crawlingathome_worker_spark.operators.similarity import _planes
+
+    df, vecs = _embeddings(spark)
     pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in knn_self_join(df, threshold=0.95).collect()}
     assert (0, 2) in pairs and abs(pairs[(0, 2)] - 1.0) < 1e-9
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.95
     # random 32-d vectors essentially never exceed 0.95 cosine
     assert all({a, b} <= {0, 1, 2} for (a, b) in pairs)
+
+    threshold, tables, bits = 0.3, 2, 3
+    v32 = vecs.astype(np.float32).astype(np.float64)  # what Spark stored
+    norms = np.linalg.norm(v32, axis=1)
+    cos = (v32 @ v32.T) / np.outer(norms, norms)
+    weights = 1 << np.arange(bits)
+    sigs = [((v32 @ _planes(32, bits, 42 + 1000 * t).T) > 0) @ weights for t in range(tables)]
+    want = {
+        (i, j): cos[i, j]
+        for i in range(len(v32))
+        for j in range(i + 1, len(v32))
+        if cos[i, j] >= threshold and any(s[i] == s[j] for s in sigs)
+    }
+    got = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in knn_self_join(
+            df, threshold=threshold, n_tables=tables, bits_per_table=bits
+        ).collect()
+    }
+    assert len(want) > 100
+    assert set(got) == set(want)
+    assert all(abs(got[p] - want[p]) < 1e-9 for p in want)
 
 
 def test_knn_banded_recall_matches_lsh_math(spark):
@@ -188,28 +216,3 @@ def test_recall_calibration_at_sf01(spark):
     }
     assert got_sh == want  # pigeonhole banding: complete AND exact
     assert len(want) > 0  # the fixture actually plants near-dups at this scale
-
-
-def test_knn_scoring_placement_variants_agree(spark, fx_dir):
-    """score_before_collapse=True (the network-bound-cluster shape: survivors-
-    only scalar shuffle) must produce the same pair set and cosines as the
-    collapse-first default — identical evaluations, different plan shape."""
-    import os
-
-    from crawlingathome_worker_spark.operators.similarity import (
-        knn_self_join,
-        release_knn_caches,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(threshold=0.4, n_tables=4, bits_per_table=6, dim=64)
-    a = {
-        (r["id_a"], r["id_b"], round(r["cosine"], 9))
-        for r in knn_self_join(emb, **kw).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"], round(r["cosine"], 9))
-        for r in knn_self_join(emb, score_before_collapse=True, **kw).collect()
-    }
-    release_knn_caches()
-    assert a == b and len(a) > 0

@@ -1,5 +1,7 @@
 """Text dedup + analysis operators vs hand-computed / pure-python expectations."""
 
+import collections
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -107,11 +109,18 @@ def test_bpe_estimate_monotone(spark):
     assert rows[5] == 0
 
 
-def test_simhash_banding_complete_at_any_radius(spark):
+def test_simhash_banding_complete_at_any_radius(spark, small_arrow_batches):
     """Pigeonhole banding (bands = r+1) must have FULL candidate recall — the
     round-1 fixed 4×16 banding silently missed 62% of radius-8 pairs. Checked
-    against a brute-force all-pairs scan at a radius above the classic 3."""
+    against a brute-force all-pairs scan at a radius above the classic 3.
+
+    The same fingerprints also go through phash_near_pairs with long and with
+    string ids. Arrow batches of 7 rows put many buckets in each batch and
+    split the larger buckets across batches, so the bucket-local executor's
+    carry of the open bucket is checked against brute force too."""
     import itertools
+
+    from crawlingathome_worker_spark.operators.imagededup import phash_near_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     fps = {r["doc_id"]: r["simhash"] for r in simhash_fingerprints(docs).collect()}
@@ -127,6 +136,30 @@ def test_simhash_banding_complete_at_any_radius(spark):
     }
     assert len(brute) > 100
     assert got == brute
+
+    # a bucket larger than one batch must span a batch boundary; the buckets
+    # are hash64_band_chunks at radius 6: bit-bands of widths 10, 9, …, 9
+    widths = [10] + [9] * 6
+    starts = itertools.accumulate([0] + widths[:-1])
+    bucket_sizes = collections.Counter(
+        (band, (fp & 0xFFFFFFFFFFFFFFFF) >> start & ((1 << width) - 1))
+        for band, (start, width) in enumerate(zip(starts, widths))
+        for fp in fps.values()
+    )
+    assert max(bucket_sizes.values()) > small_arrow_batches
+
+    hashes = spark.createDataFrame(list(fps.items()), "doc_id long, phash long")
+    got_long = {
+        (r["id_a"], r["id_b"])
+        for r in phash_near_pairs(hashes, id_col="doc_id", max_hamming=radius).collect()
+    }
+    assert got_long == brute
+    keyed = hashes.select(F.col("doc_id").cast("string").alias("key"), "phash")
+    got_str = {
+        (r["id_a"], r["id_b"])
+        for r in phash_near_pairs(keyed, id_col="key", max_hamming=radius).collect()
+    }
+    assert got_str == {tuple(sorted((str(a), str(b)))) for a, b in brute}
 
 
 def test_corpus_profile_approx_within_rank_error(spark):

@@ -22,9 +22,10 @@ ANNOTATIONS = {
     "q12_tpch_q5": "Fact-oriented join order (r6): orders probes broadcast(region⨝nation⨝customer), lineitem probes broadcast(supplier), one fact-fact join keys the two reduced streams — lineitem is never collected into a broadcast build (the old left-deep chain broadcast the 1.5M-row orders AND 6M-row lineitem scans via pruned-size estimates).",
     "q11_tpch_q3": "Dimension side broadcast (static 16 MB threshold + AQE runtime promotion, r6); TakeOrderedAndProject for the top-10 (no global sort).",
     "q20_minhash_lsh_pairs": "LSH band join: Exchange keyed (band, bucket) only — candidate pairs meet inside buckets, never via cartesian; the documents scan repartitions to session parallelism before the signature UDF (r6).",
-    "q21_simhash_pairs": "Pigeonhole banding (r+1 bands) as the ONE shuffle key; pairing + hamming verify run bucket-locally in a vectorized Arrow stage (XOR broadcast + SWAR popcount, r6) so only radius survivors reach the duplicate collapse — the former band self-join materialized the quadratic candidate set.",
+    "q21_simhash_pairs": "Pigeonhole banding (r+1 bands) as the ONE shuffle key, sorted within partitions on it; one MapInPandas streams the sorted batches, carrying the open bucket across batch boundaries (a task holds one batch plus one bucket), and pairs + hamming-verifies each bucket (XOR broadcast + SWAR popcount, operators/pairs.py) so only radius survivors reach the duplicate collapse.",
     "q23_ann_topk": "One gemv-per-Arrow-batch UDF + TakeOrderedAndProject: score 100 TB, keep k, no global sort shuffle.",
-    "q26_embedding_neardup": "Banded multi-table signatures exploded to (band, sig) — the ONE shuffle key; pairing + exact cosine run bucket-locally in a grouped Arrow stage (gemm prefilter + exact einsum re-score, r6) so only threshold survivors leave the task — the former self-join shuffled the quadratic candidate set with both vectors.",
+    "q26_embedding_neardup": "Banded multi-table signatures exploded to (band, sig) — the ONE shuffle key — by the same bucket-local executor as q21/q31 with the cosine kernel (gemm prefilter + exact einsum re-score), so only threshold survivors leave the task. The signature UDF is ONE ArrowEvalPython: posexplode_outer infers no size(sigs) > 0 filter, so no second copy of the UDF is pushed below the scan repartition.",
+    "q31_phash_near_pairs": "The q21 plan over decoded pHashes: (r+1) bit-bands as the ONE shuffle key, bucket-local pairing and popcount verify in one MapInPandas, survivors-only duplicate collapse — no band self-join and no quadratic candidate set.",
     "q35_ann_ivf": "Cell filter before the scorer: only n_probe cells' rows reach the cosine UDF (at rest: partition-pruned files, see test_multimodal).",
     "q48_tpch_q10": "4-table star: dims broadcast, fact shuffles once; top-20 via TakeOrderedAndProject, never a global sort.",
     "q49_tpch_q19": "OR-of-ANDs predicate evaluated in one codegen span over the broadcast join; part-side conjuncts prune the build side.",
